@@ -82,9 +82,11 @@ def _basket_arrays(
             .groupBy("__b")
             .agg(F.count(F.lit(1)).alias("__sz"))
             .filter(F.col("__sz") <= max_basket_size)
-            .select("__b")
+            .select(F.col("__b").alias("__ok"))
         )
-        rows = rows.join(ok, "__b", "left_semi")
+        # null-safe: a NULL basket is one group in the agg below, so it
+        # must survive the semi-join too
+        rows = rows.join(ok, F.col("__b").eqNullSafe(F.col("__ok")), "left_semi")
     arr = (
         rows.groupBy("__b")
         .agg(

@@ -33,6 +33,7 @@ __all__ = [
     "name_match",
     "match_cascade",
     "change_detect",
+    "latest_per_key",
     "cdc_apply",
     "reconcile",
     "fuzzy_name_match",
@@ -337,6 +338,23 @@ def fuzzy_name_match(
     )
 
 
+def latest_per_key(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:
+    """Keep each key's latest row: the highest ``order_by`` (compared
+    left to right; the caller's columns must order rows within a key).
+    One shuffle on the key; the rank-1 filter rides Spark's
+    WindowGroupLimit pushdown, so mappers forward one candidate row per
+    key per partition. The compaction behind ``cdc_apply`` and the MERGE
+    sinks (sources/sinks.py)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def cdc_apply(
     ops: DataFrame,
     keys: list[str],
@@ -350,18 +368,8 @@ def cdc_apply(
     join-based upsert expresses). This is what "apply the CDC feed to the
     table" means in every lakehouse MERGE, stated as a pure relation.
 
-    Keep each key's latest op by ``order_by`` (descending, with the
-    caller-supplied columns providing a total order within the key — a
-    change stream always carries (ts, lsn/seq)), then drop keys whose
-    final op is ``delete_value``. One shuffle on the key; the rank-1
-    filter rides Spark's WindowGroupLimit pushdown, so mappers forward
-    one candidate row per key per partition, not the whole log.
+    Keep each key's latest op by ``order_by`` (``latest_per_key``; a
+    change stream always carries (ts, lsn/seq) for a total order within
+    the key), then drop keys whose final op is ``delete_value``.
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
-    return (
-        ops.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col(op_col) != delete_value))
-        .drop("__rn")
-    )
+    return latest_per_key(ops, keys, order_by).filter(F.col(op_col) != delete_value)

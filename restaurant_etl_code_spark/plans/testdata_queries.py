@@ -2349,7 +2349,7 @@ select * from updates
 
 def _q_merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PHYSICAL partition-pruned MERGE sink, end-to-end
-    (sources/sinks.write_merge_target + merge_into_bucketed_parquet +
+    (sources/sinks.write_merge_target + merge_into_parquet +
     read_bucketed): write orders as a bucketed target, merge a ~1% delta —
     only the delta's bucket directories are listed, read, and swapped — then
     read the target back and aggregate. This is the scale path for the
@@ -2357,7 +2357,7 @@ def _q_merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     repository/ops/services/batch_processor.py:167-245): merge cost tracks
     |delta|, not |table|."""
     from restaurant_etl_code_spark.sources.sinks import (
-        merge_into_bucketed_parquet,
+        merge_into_parquet,
         read_bucketed,
         write_merge_target,
     )
@@ -2376,7 +2376,7 @@ def _q_merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") * 2).alias("o_totalprice"),
         F.lit("U").alias("o_orderstatus"),
     )
-    merge_into_bucketed_parquet(spark, path, updates, ["o_orderkey"])
+    merge_into_parquet(spark, path, updates, ["o_orderkey"])
     return read_bucketed(spark, path).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)"))

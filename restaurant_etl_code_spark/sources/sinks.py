@@ -6,6 +6,14 @@ with per-row ``continueOnError`` capture, K8). Without a Delta/Iceberg jar in
 this image, MERGE is emulated on plain parquet with an atomic
 write-temp-then-swap — the emulation keeps MERGE's *semantics* (matched rows
 updated, unmatched inserted) so swapping in Delta later is a one-line change.
+
+Two entry points share one MERGE body: ``cdc_merge_into_parquet`` applies an
+I/U/D batch compacted to each key's latest op by ``order_by``, and
+``merge_into_parquet`` is the same merge with every row an upsert, ordered by
+input position — within one batch the last row of a repeated key in input
+order wins. Both pick the layout from disk: a ``write_merge_target`` target
+(``_bucket_spec.json``) merges bucket by bucket, any other target is
+rewritten whole, and a missing target is created flat.
 """
 
 from __future__ import annotations
@@ -15,8 +23,10 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from restaurant_etl_code_spark.operators.matching import latest_per_key
 
 __all__ = [
     "ingest_table",
@@ -27,8 +37,6 @@ __all__ = [
     "read_bucketed",
     "rebucket",
     "recover_merge_target",
-    "merge_into_bucketed_parquet",
-    "cdc_merge_into_bucketed_parquet",
     "write_failed_rows",
     "classify_write_status",
     "write_partitioned",
@@ -213,8 +221,8 @@ def rebucket(
     table whose data outgrew its creation-time bucket count (merge cost is
     per-bucket, so buckets must track table size to stay ~1 GB). Reads the
     whole table ONCE, rewrites it under the new layout into a sibling tmp
-    dir, then swaps the entire table with two renames (old → trash,
-    tmp → live). Runs under the merge lock; returns the new bucket count.
+    dir, then swaps the entire table in (``_swap_in``). Runs under the
+    merge lock; returns the new bucket count.
     O(|table|) by design — rebucketing IS a full rewrite, done rarely,
     exactly like OPTIMIZE/rewrite in a real table format."""
     spec = _load_bucket_spec(path)
@@ -228,14 +236,13 @@ def rebucket(
             n_buckets = _auto_n_buckets(df)
         tmp = f"{path}.__tmp_{uuid.uuid4().hex[:8]}"
         write_merge_target(df, tmp, spec["keys"], n_buckets)
-        trash = f"{path}.__trash_{uuid.uuid4().hex[:8]}"
-        os.rename(path, trash)
-        os.rename(tmp, path)
-        shutil.rmtree(trash, ignore_errors=True)
+        _swap_in(tmp, path)
         return int(n_buckets)
     finally:
-        # after a successful swap the lock rode the old dir into the trash;
-        # on failure it is still at <path>/_merge.lock — remove either way
+        # a swap that failed between its renames puts the old table (and
+        # the lock inside it) back; after a successful swap the lock rode
+        # the old dir away — remove it either way
+        _restore_swapped_out(path)
         try:
             os.remove(lock)
         except FileNotFoundError:
@@ -339,8 +346,8 @@ def recover_merge_target(target_path: str) -> bool:
     see ``_replay_swap``) and clean its tmp/trash dirs; then sweep any
     orphaned pre-manifest scratch dirs. Returns True if an interrupted
     commit was found and completed. Runs automatically at the start of
-    every ``merge_into_bucketed_parquet`` / ``cdc_merge_into_bucketed_parquet``,
-    so a crashed merge heals on the next merge (or on an explicit call)."""
+    every bucketed ``merge_into_parquet`` / ``cdc_merge_into_parquet``, so
+    a crashed merge heals on the next merge (or on an explicit call)."""
     manifest = os.path.join(target_path, _COMMIT_MANIFEST)
     # refuse to recover (or sweep) under a LIVE merge — its tmp dir is in
     # active use; dead-process locks were already reclaimable, so only a
@@ -373,43 +380,93 @@ def recover_merge_target(target_path: str) -> bool:
     return acted
 
 
-def merge_into_bucketed_parquet(
+def _swap_in(tmp: str, target_path: str) -> None:
+    """Whole-table swap: ``tmp`` becomes the table. The old table steps
+    aside as a ``<target>.__old_*`` sibling between the two renames; a
+    crash there leaves no table, which ``_restore_swapped_out`` undoes at
+    the next merge."""
+    if os.path.exists(target_path):
+        old = f"{target_path}.__old_{uuid.uuid4().hex[:8]}"
+        os.rename(target_path, old)
+        os.rename(tmp, target_path)
+        shutil.rmtree(old)
+    else:
+        os.rename(tmp, target_path)
+
+
+def _restore_swapped_out(target_path: str) -> None:
+    """Undo a whole-table swap that died between its two renames: a missing
+    table with a ``<target>.__old_*`` sibling is renamed back (the newest,
+    if several), so the next merge applies its batch to the full table
+    instead of writing the batch alone. A replayed foreachBatch epoch then
+    redoes the batch the crash lost."""
+    parent = os.path.dirname(os.path.abspath(target_path))
+    if os.path.exists(target_path) or not os.path.isdir(parent):
+        return
+    prefix = os.path.basename(os.path.abspath(target_path)) + ".__old_"
+    olds = [
+        os.path.join(parent, d) for d in os.listdir(parent) if d.startswith(prefix)
+    ]
+    if olds:
+        os.rename(max(olds, key=os.path.getmtime), target_path)
+
+
+def _merge(
     spark: SparkSession,
     target_path: str,
-    updates: DataFrame,
+    batch: DataFrame,
     keys: list[str],
-    n_buckets: int | str = "auto",
+    deleted: Column | None = None,
 ) -> None:
-    """Partition-pruned MERGE (K1/K7/K9 upsert-by-id semantics,
-    reference api/api-client.py:270-368, batch_processor.py:167-245): only
-    the bucket directories containing updated keys are read, merged, and
-    swapped. First call creates the bucketed layout. Cost: O(|updates| +
-    |touched buckets|) — a 1-row upsert rewrites one bucket, not the table.
-    The sequence runs under the target's merge lock, after healing any
-    interrupted previous commit (``recover_merge_target``)."""
-    if not os.path.exists(target_path):
-        write_merge_target(updates, target_path, keys, n_buckets)
-        return
+    """The one MERGE body. ``batch`` holds at most one row per key
+    (``latest_per_key``); ``deleted`` is the Column marking its delete rows
+    (None: every row is an upsert). Matched target rows are replaced,
+    unmatched batch rows inserted, deleted keys removed.
+
+    A target laid out by ``write_merge_target`` (a ``_bucket_spec.json`` on
+    disk) takes the partition-pruned path: only the bucket directories the
+    batch touches are read, merged and swapped, under the target's merge
+    lock and after healing any interrupted previous commit
+    (``recover_merge_target``) — cost O(|batch| + |touched buckets|). Any
+    other target is rewritten whole and swapped in; a missing one is a
+    first write of the upserts."""
+
+    def upserts(rows: DataFrame) -> DataFrame:
+        return rows if deleted is None else rows.filter(~deleted)
+
+    def merged_into(target: DataFrame, rows: DataFrame) -> DataFrame:
+        if deleted is not None:
+            gone = rows.filter(deleted).select(*keys)
+            target = target.join(F.broadcast(gone), keys, "left_anti")
+        return merge_upsert(target, upserts(rows), keys)
+
+    _restore_swapped_out(target_path)
     spec = _load_bucket_spec(target_path)
     if spec is None:
-        raise ValueError(
-            f"{target_path} is not a bucketed target (no {_BUCKET_SPEC}); "
-            "use merge_into_parquet or rewrite it with write_merge_target first"
+        merged = (
+            merged_into(spark.read.parquet(target_path), batch)
+            if os.path.exists(target_path)
+            else upserts(batch)
         )
+        tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
+        merged.write.mode("overwrite").parquet(tmp)
+        _swap_in(tmp, target_path)
+        return
     if spec["keys"] != keys:
         raise ValueError(f"bucket spec keys {spec['keys']} != merge keys {keys}")
-    n = spec["n_buckets"]
-    # persist: the delta is evaluated twice (touched-set collect + the
-    # merged write); a non-deterministic updates source re-evaluated could
-    # emit rows in buckets outside the collected touched set, which the
-    # swap would then silently drop (found in review). Built BEFORE the
-    # lock so a failure here can't leave the lock held (found in review).
-    upd = updates.withColumn(_BUCKET_COL, _bucket_expr(keys, n)).persist()
+    # persist: the batch is evaluated twice (touched-set collect + the
+    # merged write); a non-deterministic source re-evaluated could emit
+    # rows in buckets outside the collected touched set, which the swap
+    # would then silently drop (found in review). Built BEFORE the lock so
+    # a failure here can't leave the lock held (found in review).
+    batch_b = batch.withColumn(
+        _BUCKET_COL, _bucket_expr(keys, spec["n_buckets"])
+    ).persist()
     lock = _acquire_merge_lock(target_path)
     try:
         recover_merge_target(target_path)  # heal any interrupted commit
         touched = sorted(
-            r[0] for r in upd.select(_BUCKET_COL).distinct().collect()
+            r[0] for r in batch_b.select(_BUCKET_COL).distinct().collect()
         )  # ≤ n_buckets scalars
         if not touched:
             return
@@ -417,87 +474,16 @@ def merge_into_bucketed_parquet(
             target_sub = spark.read.parquet(target_path).filter(
                 F.col(_BUCKET_COL).isin(touched)  # PartitionFilters prune the rest
             )
-            merged = merge_upsert(target_sub, upd.select(*target_sub.columns), keys)
+            merged = merged_into(target_sub, batch_b)
         else:  # target exists but is empty on disk (all rows previously deleted)
-            merged = upd
+            merged = upserts(batch_b)
         tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
         merged.repartition(len(touched), F.col(_BUCKET_COL)).write.mode(
             "overwrite"
         ).partitionBy(_BUCKET_COL).parquet(tmp)
         _swap_buckets(target_path, tmp, touched)
     finally:
-        upd.unpersist()
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
-
-
-def cdc_merge_into_bucketed_parquet(
-    spark: SparkSession,
-    target_path: str,
-    ops: DataFrame,
-    keys: list[str],
-    order_by: list[str],
-    op_col: str = "op",
-    delete_value: str = "D",
-    n_buckets: int | str = "auto",
-) -> None:
-    """Delete-aware partition-pruned MERGE: compact the op batch to each
-    key's latest op, then read/rewrite/swap only the buckets named by the
-    batch (upserts AND deletes both touch their key's bucket). Lock +
-    crash recovery as in ``merge_into_bucketed_parquet``."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
-    latest = (
-        ops.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    upserts = latest.filter(F.col(op_col) != delete_value)
-    if not os.path.exists(target_path):
-        write_merge_target(upserts, target_path, keys, n_buckets)
-        return
-    spec = _load_bucket_spec(target_path)
-    if spec is None:
-        raise ValueError(
-            f"{target_path} is not a bucketed target (no {_BUCKET_SPEC})"
-        )
-    if spec["keys"] != keys:
-        raise ValueError(f"bucket spec keys {spec['keys']} != merge keys {keys}")
-    n = spec["n_buckets"]
-    # persist for the same two-evaluation reason as merge_into_bucketed_parquet;
-    # before the lock so a failure here can't leave the lock held
-    latest_b = latest.withColumn(_BUCKET_COL, _bucket_expr(keys, n)).persist()
-    lock = _acquire_merge_lock(target_path)
-    try:
-        recover_merge_target(target_path)
-        touched = sorted(
-            r[0] for r in latest_b.select(_BUCKET_COL).distinct().collect()
-        )
-        if not touched:
-            return
-        deletes = latest_b.filter(F.col(op_col) == delete_value).select(*keys)
-        upserts_b = latest_b.filter(F.col(op_col) != delete_value)
-        if _bucket_dirs(target_path):
-            target_sub = (
-                spark.read.parquet(target_path)
-                .filter(F.col(_BUCKET_COL).isin(touched))
-                .join(F.broadcast(deletes), keys, "left_anti")
-            )
-            merged = merge_upsert(
-                target_sub, upserts_b.select(*target_sub.columns), keys
-            )
-        else:
-            merged = upserts_b
-        tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-        merged.repartition(len(touched), F.col(_BUCKET_COL)).write.mode(
-            "overwrite"
-        ).partitionBy(_BUCKET_COL).parquet(tmp)
-        _swap_buckets(target_path, tmp, touched)
-    finally:
-        latest_b.unpersist()
+        batch_b.unpersist()
         try:
             os.remove(lock)
         except FileNotFoundError:
@@ -507,28 +493,20 @@ def cdc_merge_into_bucketed_parquet(
 def merge_into_parquet(
     spark: SparkSession, target_path: str, updates: DataFrame, keys: list[str]
 ) -> None:
-    """MERGE into a parquet table with atomic swap. If the target does not
-    exist, this is a plain write (first load). If the target was laid out by
-    ``write_merge_target`` the partition-pruned path is taken automatically, so
-    callers (including the streaming foreachBatch sinks) inherit
-    delta-proportional merge cost just by bucketing the target once."""
-    if _load_bucket_spec(target_path) is not None:
-        merge_into_bucketed_parquet(spark, target_path, updates, keys)
-        return
-    if os.path.exists(target_path):
-        target = spark.read.parquet(target_path)
-        merged = merge_upsert(target, updates, keys)
-    else:
-        merged = updates
-    tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(target_path):
-        old = f"{target_path}.__old_{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, target_path)
+    """MERGE ``updates`` into a parquet table (K1/K7/K9 upsert-by-id
+    semantics, reference api/api-client.py:270-368,
+    batch_processor.py:167-245): an upsert is a CDC merge with no deletes.
+    Within the batch the last row of a repeated key in input order wins
+    (the ES bulk-index rule: a later index of the same ``_id`` overwrites
+    an earlier one). A missing target is a plain first write; a
+    ``write_merge_target`` target takes the partition-pruned path
+    automatically, so callers (including the streaming foreachBatch sinks)
+    get delta-proportional merge cost just by bucketing the target once."""
+    pos = "__pos"
+    batch = latest_per_key(
+        updates.withColumn(pos, F.monotonically_increasing_id()), keys, [pos]
+    ).drop(pos)
+    _merge(spark, target_path, batch, keys)
 
 
 def cdc_merge_into_parquet(
@@ -542,47 +520,17 @@ def cdc_merge_into_parquet(
 ) -> None:
     """Delete-aware MERGE: apply a CDC op batch (I/U/D) to a parquet
     target — the sink-side twin of ``operators.matching.cdc_apply``.
-    The batch is first compacted to each key's LATEST op (a delete that
-    is followed in the same batch by a re-insert must not win), then
-    deletes anti-join out of the target and survivors upsert in; the
-    write lands with the same atomic tmp-swap as ``merge_into_parquet``.
-    With a transactional table format this is ``MERGE INTO ... WHEN
-    MATCHED AND op = 'D' THEN DELETE``. A ``write_merge_target`` target takes
-    the partition-pruned path automatically.
+    The batch is first compacted to each key's LATEST op by ``order_by``
+    (a delete that is followed in the same batch by a re-insert must not
+    win), then deletes anti-join out of the target and survivors upsert
+    in, with the same layouts and swaps as ``merge_into_parquet``. With a
+    transactional table format this is ``MERGE INTO ... WHEN MATCHED AND
+    op = 'D' THEN DELETE``.
     """
-    from pyspark.sql import Window
-
-    if _load_bucket_spec(target_path) is not None:
-        cdc_merge_into_bucketed_parquet(
-            spark, target_path, ops, keys, order_by,
-            op_col=op_col, delete_value=delete_value,
-        )
-        return
-
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
-    latest = (
-        ops.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    _merge(
+        spark, target_path, latest_per_key(ops, keys, order_by), keys,
+        F.col(op_col) == delete_value,
     )
-    upserts = latest.filter(F.col(op_col) != delete_value)
-    deletes = latest.filter(F.col(op_col) == delete_value).select(*keys)
-    if os.path.exists(target_path):
-        target = spark.read.parquet(target_path).join(
-            F.broadcast(deletes), keys, "left_anti"
-        )
-        merged = merge_upsert(target, upserts, keys)
-    else:
-        merged = upserts
-    tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(target_path):
-        old = f"{target_path}.__old_{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, target_path)
 
 
 def write_failed_rows(

@@ -150,20 +150,14 @@ def run_available_now(
     return q
 
 
-def foreach_batch_upsert(
+def _drain(
     streamed: DataFrame,
-    target_path: str,
-    keys: list[str],
     checkpoint_dir: str,
+    sink: Callable[[DataFrame, int], None],
 ) -> StreamingQuery:
-    """Exactly-once-ish streaming MERGE sink: each micro-batch upserts into a
-    parquet target via the K8/K9 merge emulation (sources/sinks.py). With a
-    transactional table format this is ``foreachBatch`` + ``MERGE INTO``."""
-    from restaurant_etl_code_spark.sources.sinks import merge_into_parquet
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_into_parquet(batch_df.sparkSession, target_path, batch_df, keys)
-
+    """Run ``sink`` on every micro-batch of everything currently in the
+    source (foreachBatch + Trigger.AvailableNow) and wait for the drain to
+    finish. The checkpoint makes replays idempotent at the batch level."""
     q = (
         streamed.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
@@ -172,6 +166,25 @@ def foreach_batch_upsert(
     )
     q.awaitTermination()
     return q
+
+
+def foreach_batch_upsert(
+    streamed: DataFrame,
+    target_path: str,
+    keys: list[str],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Exactly-once-ish streaming MERGE sink: each micro-batch upserts into a
+    parquet target via the K8/K9 merge emulation (sources/sinks.py); the
+    last row of a key repeated within a micro-batch wins, in input order.
+    With a transactional table format this is ``foreachBatch`` +
+    ``MERGE INTO``."""
+    from restaurant_etl_code_spark.sources.sinks import merge_into_parquet
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        merge_into_parquet(batch_df.sparkSession, target_path, batch_df, keys)
+
+    return _drain(streamed, checkpoint_dir, sink)
 
 
 def foreach_batch_cdc_apply(
@@ -197,14 +210,7 @@ def foreach_batch_cdc_apply(
             op_col=op_col, delete_value=delete_value,
         )
 
-    q = (
-        streamed_ops.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(streamed_ops, checkpoint_dir, sink)
 
 
 def stream_stream_interval_join(
@@ -322,14 +328,7 @@ def foreach_batch_state_maintenance(
             f"{state_path}/epoch={epoch_id}")
         _prune_epochs(state_path, keep=2)
 
-    q = (
-        streamed.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(streamed, checkpoint_dir, sink)
 
 
 def _epochs(state_path: str) -> list[int]:
@@ -397,7 +396,8 @@ def curate_stream_to_merge_target(
     """
     from restaurant_etl_code_spark.functions import text as Ftext
     from restaurant_etl_code_spark.sources.sinks import (
-        merge_into_bucketed_parquet,
+        merge_into_parquet,
+        write_merge_target,
     )
 
     toks = F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != "")
@@ -410,19 +410,14 @@ def curate_stream_to_merge_target(
             F.min(id_col).alias("canonical_id"),
             F.count(F.lit(1)).alias("n_dups"),
         )
-        merge_into_bucketed_parquet(
-            batch_df.sparkSession, target_path, upserts, ["fingerprint"],
-            n_buckets=n_buckets,
-        )
+        if os.path.exists(target_path):
+            merge_into_parquet(
+                batch_df.sparkSession, target_path, upserts, ["fingerprint"]
+            )
+        else:  # the first batch lays out the bucketed target
+            write_merge_target(upserts, target_path, ["fingerprint"], n_buckets)
 
-    q = (
-        gated.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(gated, checkpoint_dir, sink)
 
 
 def curate_stream_near_dup(
@@ -490,7 +485,8 @@ def curate_stream_near_dup(
     from restaurant_etl_code_spark.functions import text as Ftext
     from restaurant_etl_code_spark.operators import dedup as D
     from restaurant_etl_code_spark.sources.sinks import (
-        merge_into_bucketed_parquet,
+        merge_into_parquet,
+        write_merge_target,
     )
 
     bands_path = target_path + "_bands"
@@ -620,19 +616,13 @@ def curate_stream_near_dup(
             id_col, "band_idx", "band_hash", "__bucket"
         ).write.mode("append").partitionBy("__bucket").parquet(bands_path)
         sc.setJobDescription(f"neardup batch {epoch_id}: merge")
-        merge_into_bucketed_parquet(
-            spark, target_path, survivors, [id_col], n_buckets=n_buckets
-        )
+        if os.path.exists(target_path):
+            merge_into_parquet(spark, target_path, survivors, [id_col])
+        else:  # the first batch lays out the bucketed target
+            write_merge_target(survivors, target_path, [id_col], n_buckets)
         sc.setJobDescription(None)
         survivors.unpersist()
         banded_d.unpersist()
         sigs_d.unpersist()
 
-    q = (
-        gated.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(gated, checkpoint_dir, sink)

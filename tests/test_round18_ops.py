@@ -180,6 +180,7 @@ def test_basket_prefilter_oversized_is_result_identical(spark):
         + [("b1", x) for x in ("a", "b", "c", "a")]  # dup collapses
         + [("b2", x) for x in ("a", "b", None)]      # null counts as 1
         + [("b3", x) for x in ("a", "b", "c")]
+        + [(None, x) for x in ("a", "b")]            # NULL basket is a basket
     )
     df = spark.createDataFrame(rows, "basket string, item string")
 

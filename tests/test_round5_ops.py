@@ -39,7 +39,7 @@ def test_bucketed_merge_semantics(spark, tmp_path):
     updates = spark.createDataFrame(
         [(7, "n7", 700.0), (100, "new", 1.0)], "k int, name string, price double"
     )
-    sinks.merge_into_bucketed_parquet(spark, path, updates, ["k"])
+    sinks.merge_into_parquet(spark, path, updates, ["k"])
     got = {r["k"]: r["price"] for r in sinks.read_bucketed(spark, path).collect()}
     assert len(got) == 101
     assert got[7] == 700.0 and got[100] == 1.0 and got[3] == 3.0
@@ -53,7 +53,7 @@ def test_bucketed_merge_only_rewrites_touched_buckets(spark, tmp_path):
     sinks.write_merge_target(base, path, ["k"], n_buckets=16)
     before = _bucket_files(path)
     one = spark.createDataFrame([(42, 4200.0)], "k int, price double")
-    sinks.merge_into_bucketed_parquet(spark, path, one, ["k"])
+    sinks.merge_into_parquet(spark, path, one, ["k"])
     after = _bucket_files(path)
     # exactly one bucket (the one holding k=42) differs; all others are
     # byte-identical files at identical relative paths
@@ -122,7 +122,7 @@ def test_bucketed_merge_key_mismatch_fails_fast(spark, tmp_path):
     base = spark.createDataFrame([(1, 1.0)], "k int, v double")
     sinks.write_merge_target(base, path, ["k"], n_buckets=4)
     with pytest.raises(ValueError, match="bucket spec keys"):
-        sinks.merge_into_bucketed_parquet(
+        sinks.merge_into_parquet(
             spark, path, base.withColumnRenamed("k", "j"), ["j"]
         )
 
@@ -158,7 +158,7 @@ def test_swap_leaves_no_foreign_dirs_in_target(spark, tmp_path):
     base = spark.createDataFrame([(i, float(i)) for i in range(100)], "k int, v double")
     sinks.write_merge_target(base, path, ["k"], n_buckets=8)
     upd = spark.createDataFrame([(1, -1.0), (2, -2.0)], "k int, v double")
-    sinks.merge_into_bucketed_parquet(spark, path, upd, ["k"])
+    sinks.merge_into_parquet(spark, path, upd, ["k"])
     entries = set(os.listdir(path))
     # "_"/"."-prefixed files (_SUCCESS, crc, the spec) are invisible to
     # Spark reads; what must NOT exist is any non-bucket DIRECTORY, which

@@ -42,7 +42,7 @@ def test_merge_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(os, "rename", dying_rename)
     with pytest.raises(OSError, match="simulated crash"):
-        sinks.merge_into_bucketed_parquet(spark, path, updates, ["k"])
+        sinks.merge_into_parquet(spark, path, updates, ["k"])
     monkeypatch.setattr(os, "rename", real_rename)
 
     # the interrupted commit left its manifest behind
@@ -85,7 +85,7 @@ def test_merge_recovery_runs_automatically_on_next_merge(spark, tmp_path, monkey
 
     monkeypatch.setattr(os, "rename", dying_rename)
     with pytest.raises(OSError):
-        sinks.merge_into_bucketed_parquet(spark, path, updates, ["k"])
+        sinks.merge_into_parquet(spark, path, updates, ["k"])
     monkeypatch.setattr(os, "rename", real_rename)
     # the surviving process released its lock in the finally; the manifest
     # from the interrupted swap is what persists
@@ -93,7 +93,7 @@ def test_merge_recovery_runs_automatically_on_next_merge(spark, tmp_path, monkey
 
     # next merge heals the interrupted one, then applies its own delta
     more = spark.createDataFrame([(199, 999.0)], "k int, price double")
-    sinks.merge_into_bucketed_parquet(spark, path, more, ["k"])
+    sinks.merge_into_parquet(spark, path, more, ["k"])
     got = {r["k"]: r["price"] for r in sinks.read_bucketed(spark, path).collect()}
     assert got[199] == 999.0
     for i in range(30):
@@ -111,11 +111,11 @@ def test_merge_lock_blocks_concurrent_and_reclaims_stale(spark, tmp_path):
         json.dump({"pid": os.getpid(), "id": "x"}, fh)
     upd = spark.createDataFrame([(1, 2.0)], "k int, price double")
     with pytest.raises(ValueError, match="concurrent merge"):
-        sinks.merge_into_bucketed_parquet(spark, path, upd, ["k"])
+        sinks.merge_into_parquet(spark, path, upd, ["k"])
     # dead holder → reclaimed transparently
     with open(lock, "w") as fh:
         json.dump({"pid": 2**21 + 12345, "id": "x"}, fh)
-    sinks.merge_into_bucketed_parquet(spark, path, upd, ["k"])
+    sinks.merge_into_parquet(spark, path, upd, ["k"])
     assert not os.path.exists(lock)
     got = {r["k"]: r["price"] for r in sinks.read_bucketed(spark, path).collect()}
     assert got[1] == 2.0
@@ -130,7 +130,7 @@ def test_stale_orphan_dirs_swept(spark, tmp_path):
     os.makedirs(stale_tmp)
     os.makedirs(stale_trash)
     upd = spark.createDataFrame([(1, 9.0)], "k int, v double")
-    sinks.merge_into_bucketed_parquet(spark, path, upd, ["k"])
+    sinks.merge_into_parquet(spark, path, upd, ["k"])
     assert not os.path.exists(stale_tmp)
     assert not os.path.exists(stale_trash)
 
@@ -180,7 +180,7 @@ def test_rebucket_resizes_and_preserves_rows(spark, tmp_path):
     assert len(got) == 500 and got[499] == "v499"
     # merges keep working against the resized layout
     upd = spark.createDataFrame([(7, "seven")], "k int, name string")
-    sinks.merge_into_bucketed_parquet(spark, path, upd, ["k"])
+    sinks.merge_into_parquet(spark, path, upd, ["k"])
     assert sinks.read_bucketed(spark, path).filter("k = 7").first()["name"] == "seven"
 
 

@@ -54,7 +54,7 @@ def test_recovery_keeps_committed_new_bucket(spark, tmp_path, monkeypatch):
     updates = spark.createDataFrame([(new_key, 42.0)], "k int, price double")
     monkeypatch.setattr(os, "remove", dying_remove)
     with pytest.raises(OSError, match="simulated crash"):
-        sinks.merge_into_bucketed_parquet(spark, path, updates, ["k"])
+        sinks.merge_into_parquet(spark, path, updates, ["k"])
     monkeypatch.setattr(os, "remove", real_remove)
 
     # swap completed: the new bucket is committed, the manifest persists
@@ -98,7 +98,7 @@ def test_recovery_still_trashes_explicitly_empty_bucket(spark, tmp_path, monkeyp
 
     monkeypatch.setattr(os, "remove", dying_remove)
     with pytest.raises(OSError, match="simulated crash"):
-        sinks.cdc_merge_into_bucketed_parquet(
+        sinks.cdc_merge_into_parquet(
             spark, path, ops, ["k"], order_by=["ts"]
         )
     monkeypatch.setattr(os, "remove", real_remove)
